@@ -138,22 +138,38 @@ def _pair_dot_udf():
     return dot2
 
 
-def _probe_cells_udf(centroids: list[list[float]], nprobe: int):
-    """Vectorized nprobe-nearest-cells assignment for IVF probes (shared by
-    the IVF and IVF-PQ paths): one distance matrix per Arrow batch, argsort
-    to the nprobe closest cell ids. nprobe > n_centroids degrades to all
-    cells (numpy slice semantics)."""
+def probe_cells(vectors, centroids, nprobe: int) -> np.ndarray:
+    """The nprobe nearest IVF cells of each probe row, by
+    ``||c||^2 - 2 p.c`` with ties to the lowest cell id (the order the
+    DuckDB IVF oracles replay). The ONE cell-resolution formula: the
+    in-plan probe UDF and every driver-side cell prune call it, so a
+    search never scores a probe in a cell whose codes were not read.
+    The sums run dimension by dimension in fixed order, so a row's cells
+    depend only on that row — a BLAS matmul's blocking can move the last
+    bit with the batch shape and flip a near-tie between an Arrow batch
+    and the driver's matrix. nprobe > n_centroids degrades to all cells
+    (numpy slice semantics). Returns int32 (rows x min(nprobe, cells))."""
+    p = np.asarray(vectors, dtype=np.float64)
     cm = np.asarray(centroids, dtype=np.float64)
-    cn = (cm * cm).sum(axis=1)
+    cn = np.zeros(len(cm))
+    dot = np.zeros((len(p), len(cm)))
+    for j in range(cm.shape[1]):
+        cn += cm[:, j] * cm[:, j]
+        dot += p[:, j, None] * cm[None, :, j]
+    d = cn[None, :] - 2.0 * dot
+    return np.argsort(d, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
+
+
+def _probe_cells_udf(centroids: list[list[float]], nprobe: int):
+    """In-plan form of probe_cells for IVF probes (shared by the IVF and
+    IVF-PQ paths): one distance matrix per Arrow batch."""
+    cm = np.asarray(centroids, dtype=np.float64)
 
     @pandas_udf("array<int>")
-    def probe_cells(v: pd.Series) -> pd.Series:
-        m = np.vstack(v.to_numpy())
-        d = cn[None, :] - 2.0 * (m @ cm.T)
-        order = np.argsort(d, axis=1)[:, :nprobe].astype(np.int32)
-        return pd.Series(list(order))
+    def cells(v: pd.Series) -> pd.Series:
+        return pd.Series(list(probe_cells(np.vstack(v.to_numpy()), cm, nprobe)))
 
-    return probe_cells
+    return cells
 
 
 def _assign_udf(centroids: list[list[float]]):
@@ -630,49 +646,34 @@ def _adc_udf(
     return adc
 
 
-def _adc_blocked_shortlist(
-    coded: DataFrame,
-    probes: DataFrame,
+def adc_cell_scorer(
     centroids: list[list[float]],
     books: list[list[list[float]]],
     sub_dim: int,
     rotation: list[list[float]] | None,
     shortlist_width: int,
-    id_col: str,
-) -> DataFrame:
-    """Per-cell blocked ADC scoring for MANY-probe batches (the gate /
-    bulk-serving regime — see topk_cosine_ivfpq's blocked_adc branch for
-    the measured motivation). Cogroups the cell-pruned code rows with the
-    cell-exploded probe rows BY CELL; inside each cell the kernel builds
-    the per-probe lookup tables once (probe chunks of 64 bound peak
-    memory at chunk x occupancy doubles) and emits only each probe's
-    per-cell top ``shortlist_width`` candidates by (ADC desc, id asc) —
-    the same tie order the global shortlist window applies, so selecting
-    per-cell first provably preserves the global top-``shortlist_width``.
-    Self-pairs are masked by ID inside the kernel. Returns
-    (probe_id, id, _adc)."""
-    import pandas as pd
+):
+    """The per-cell blocked ADC kernel, as a plain numpy function shared
+    by the distributed cogroup (_adc_blocked_shortlist) and the driver
+    branch of ann_serve.serve_batch — both paths score with this code,
+    not a copy of it.
 
+    ``score(c, ids, codes, pids, P)`` scores every probe row of ``P``
+    (ids ``pids``) against the codes of cell ``c`` (``ids`` ASCENDING,
+    ``codes`` n x m_sub): it builds the per-probe lookup tables once
+    (probe chunks of 64 bound peak memory at chunk x occupancy doubles)
+    and returns each probe's top ``shortlist_width`` candidates by (ADC
+    desc, id asc) as (probe_ids, ids, adc) arrays — the same tie order
+    the global shortlist applies, so selecting per cell first provably
+    preserves the global top-``shortlist_width``. Self-pairs are masked
+    by ID."""
     cm = np.asarray(centroids, dtype=np.float64)
     b3 = np.asarray(books, dtype=np.float64)
     m_sub = len(books)
     Rt = None if rotation is None else np.asarray(rotation, dtype=np.float64).T
-    id_type = coded.schema[id_col].dataType.simpleString()
     width = int(shortlist_width)
 
-    def kernel(codes_pdf: pd.DataFrame, probes_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"probe_id": [], id_col: [], "_adc": []})
-        if codes_pdf.empty or probes_pdf.empty:
-            return empty
-        c = int(codes_pdf["_c"].iloc[0])
-        # id-ascending rows make the stable tie sort below mean "lowest id
-        # wins" independent of the (unspecified) group row order Spark
-        # hands us (the _bucket_topk lesson, ADVICE r5)
-        codes_pdf = codes_pdf.sort_values(id_col, kind="mergesort")
-        ids = codes_pdf[id_col].to_numpy()
-        cd = np.vstack(codes_pdf["_code"].to_numpy())  # n x m_sub
-        pids = probes_pdf["probe_id"].to_numpy()
-        P = np.vstack(probes_pdf["_pv"].to_numpy())  # p x dim
+    def score(c: int, ids: np.ndarray, cd: np.ndarray, pids: np.ndarray, P: np.ndarray):
         cent_term = P @ cm[c]  # p — dot(probe, cell centroid)
         PT = P if Rt is None else P @ Rt
         ps = PT.reshape(len(P), m_sub, sub_dim)
@@ -693,7 +694,7 @@ def _adc_blocked_shortlist(
             vals = np.take_along_axis(S, sel, axis=1)
             # boundary ties: re-select ambiguous rows with a stable value
             # sort so the kept set honors (ADC desc, id asc) exactly —
-            # codes_pdf rows arrive id-sorted below, so stable = id asc
+            # ids arrive ascending, so stable = id asc
             thresh = vals.min(axis=1)
             with np.errstate(invalid="ignore"):
                 amb = (S >= thresh[:, None]).sum(axis=1) > take
@@ -706,15 +707,46 @@ def _adc_blocked_shortlist(
             out_p.append(rows[ok])
             out_i.append(ids[sel][ok])
             out_s.append(vals[ok])
-        if not out_p:
-            return empty
-        return pd.DataFrame(
-            {
-                "probe_id": np.concatenate(out_p),
-                id_col: np.concatenate(out_i),
-                "_adc": np.concatenate(out_s),
-            }
+        return np.concatenate(out_p), np.concatenate(out_i), np.concatenate(out_s)
+
+    return score
+
+
+def _adc_blocked_shortlist(
+    coded: DataFrame,
+    probes: DataFrame,
+    centroids: list[list[float]],
+    books: list[list[list[float]]],
+    sub_dim: int,
+    rotation: list[list[float]] | None,
+    shortlist_width: int,
+    id_col: str,
+) -> DataFrame:
+    """Per-cell blocked ADC scoring for MANY-probe batches (the gate /
+    bulk-serving regime — see topk_cosine_ivfpq's blocked_adc branch for
+    the measured motivation). Cogroups the cell-pruned code rows with the
+    cell-exploded probe rows BY CELL and scores each cell with
+    adc_cell_scorer. Returns (probe_id, id, _adc)."""
+    import pandas as pd
+
+    score = adc_cell_scorer(centroids, books, sub_dim, rotation, shortlist_width)
+    id_type = coded.schema[id_col].dataType.simpleString()
+
+    def kernel(codes_pdf: pd.DataFrame, probes_pdf: pd.DataFrame) -> pd.DataFrame:
+        if codes_pdf.empty or probes_pdf.empty:
+            return pd.DataFrame({"probe_id": [], id_col: [], "_adc": []})
+        # id-ascending rows make the kernel's stable tie sort mean "lowest
+        # id wins" independent of the (unspecified) group row order Spark
+        # hands us (the _bucket_topk lesson, ADVICE r5)
+        codes_pdf = codes_pdf.sort_values(id_col, kind="mergesort")
+        p, i, s = score(
+            int(codes_pdf["_c"].iloc[0]),
+            codes_pdf[id_col].to_numpy(),
+            np.vstack(codes_pdf["_code"].to_numpy()),
+            probes_pdf["probe_id"].to_numpy(),
+            np.vstack(probes_pdf["_pv"].to_numpy()),
         )
+        return pd.DataFrame({"probe_id": p, id_col: i, "_adc": s})
 
     return (
         coded.select(id_col, "_c", "_code")

@@ -5035,9 +5035,8 @@ def _ann_probed_cells(spark: SparkSession, sf_dir: str, nprobe: int = 4) -> list
             .collect()
         )
         m = np.array([list(r[0]) for r in rows], dtype=np.float64)
-        cm = np.asarray(idx.centroids, dtype=np.float64)
-        d = (cm * cm).sum(axis=1)[None, :] - 2.0 * (m @ cm.T)
-        order = np.argsort(d, axis=1)[:, :nprobe]
+        # the in-plan probe UDF's own formula: pruned cells == probed cells
+        order = S.probe_cells(m, idx.centroids, nprobe)
         _ANN_SHARED[key] = sorted({int(c) for c in order.ravel()})
     return _ANN_SHARED[key]
 

@@ -129,8 +129,11 @@ def _utc(d: datetime) -> datetime:
 
 #: process-wide (root-qualified) schema memo for committed parquet files —
 #: see SnapshotStore._committed_parquet. Immutable uuid-named files make
-#: entries permanently valid; the size cap only bounds driver memory.
+#: entries permanently valid; the size cap only bounds driver memory
+#: (at the cap the oldest entry is evicted).
 _PARQUET_SCHEMA_CACHE: dict = {}
+_PARQUET_SCHEMA_CACHE_MAX = 512
+_PARQUET_SCHEMA_LOCK = threading.Lock()  # evict-then-insert is check-then-act
 
 
 class SnapshotStore:
@@ -208,11 +211,6 @@ class SnapshotStore:
         schema makes Spark cast partition values to it, which pins the
         str-or-int inference drift the ann code-reader already normalizes.
         ``rels`` are paths relative to self.root."""
-        if os.environ.get("SPARK_GRAFT_NO_SCHEMA_CACHE"):
-            r = self.spark.read
-            if base_path is not None:
-                r = r.option("basePath", base_path)
-            return r.parquet(*[f"{self.root}/{f}" for f in rels])
         key = (base_path or "", f"{self.root}/{rels[0]}")
         schema = _PARQUET_SCHEMA_CACHE.get(key)
         if schema is None:
@@ -220,9 +218,12 @@ class SnapshotStore:
             if base_path is not None:
                 r = r.option("basePath", base_path)
             schema = r.parquet(key[1]).schema
-            if len(_PARQUET_SCHEMA_CACHE) >= 512:
-                _PARQUET_SCHEMA_CACHE.clear()
-            _PARQUET_SCHEMA_CACHE[key] = schema
+            with _PARQUET_SCHEMA_LOCK:
+                if len(_PARQUET_SCHEMA_CACHE) >= _PARQUET_SCHEMA_CACHE_MAX:
+                    # dicts keep insertion order: drop the oldest entry
+                    # only, so the other hot stores keep their schemas
+                    del _PARQUET_SCHEMA_CACHE[next(iter(_PARQUET_SCHEMA_CACHE))]
+                _PARQUET_SCHEMA_CACHE[key] = schema
         r = self.spark.read.schema(schema)
         if base_path is not None:
             r = r.option("basePath", base_path)

@@ -1006,3 +1006,110 @@ def test_serve_batch_reads_version_consistent_codes(spark, tmp_path):
         for r in serve_batch(probes, st, idx_v1, df, k=4).collect()
     }
     assert got == want and got
+
+
+def test_serve_batch_driver_and_distributed_branches_agree(
+    spark, built, tmp_path, monkeypatch, caplog
+):
+    """serve_batch's size gate forced each way returns the same
+    (probe_id, id, rank) rows with cosines within 1e-12: self-search
+    probes, a tombstoned id, a live code-delta run and a stale handle
+    pinned to an older version. Which branch ran comes from the recorded
+    decision, never from timing."""
+    import logging
+    import shutil
+
+    from binance_data_framework_spark.streaming import ann_serve as AS
+
+    caplog.set_level(logging.DEBUG, logger=AS.__name__)
+
+    # a private copy of the shared index (manifests hold store-relative
+    # paths): this test commits an append and a delete
+    shutil.copytree(built[0].root, str(tmp_path / "idx"))
+    st = AnnIndexStore(spark, str(tmp_path / "idx"))
+    idx_v1, df = st.load(), built[2]
+    # appended near-copies of rows 0-2 (new ids): each probe finds its own
+    delta = df.where(F.col("vec_id") < 3).select(
+        (F.col("vec_id") + 500).alias("vec_id"),
+        F.transform("embedding", lambda x: x + F.lit(1e-3)).alias("embedding"),
+    )
+    corpus = df.unionByName(delta)
+
+    def search(idx, probes, forced, **kw):
+        monkeypatch.setattr(AS, "SERVE_DRIVER_PAIRS_MAX", forced)
+        caplog.clear()
+        out = AS.serve_batch(probes, st, idx, corpus, nprobe=2, **kw).collect()
+        (decision,) = [r.serve_decision for r in caplog.records]
+        assert decision.branch == ("driver" if forced else "distributed")
+        assert decision.bound == forced and decision.rows > 0
+        return {(r["probe_id"], r["vec_id"], r["rank"]): r["cosine"] for r in out}, decision
+
+    def both(idx, probes, **kw):
+        drv, d = search(idx, probes, 10**12, **kw)
+        dist, _ = search(idx, probes, 0, **kw)
+        assert drv and drv.keys() == dist.keys()
+        assert max(abs(drv[key] - dist[key]) for key in drv) <= 1e-12
+        return drv, d
+
+    # self-search probes (ids in the corpus, self-pairs masked); refine=1
+    # makes the per-cell and global shortlist cuts bind (k*refine < cell
+    # occupancy)
+    probes = corpus.where(F.col("vec_id").isin(0, 1, 2, 30))
+    before, _ = search(idx_v1, probes, 10**12, k=6, refine=1)
+    assert not any(p == i for p, i, _r in before)
+    deleted = next(i for p, i, r in before if p == 30 and r == 1)
+
+    idx_v2 = st.append(delta)
+    assert any(f.startswith("codes_delta/") for f in st._snapshot()["files"])
+    idx_v3 = st.delete(spark.createDataFrame([(deleted,)], "vec_id bigint"))
+    assert idx_v3.version > idx_v2.version > idx_v1.version
+
+    # live delta run + tombstone on the latest handle
+    got, decision = both(idx_v3, probes, k=6)
+    assert decision.sizing == "footer"
+    hit = {i for _p, i, _r in got}
+    assert deleted not in hit
+    assert {500, 501, 502} <= hit
+    # one bounded count sizes the codes where no local footers exist
+    monkeypatch.setattr(st, "_local_root", lambda: None)
+    counted, decision = search(idx_v3, probes, 10**12, k=6)
+    assert decision.sizing == "count" and counted == got
+    monkeypatch.undo()
+
+    # a stale handle serves its own version in both branches: no delta
+    # ids, the later-deleted id still present — the pre-commit answer
+    stale, _ = both(idx_v1, probes, k=6, refine=1)
+    assert stale.keys() == before.keys()
+    assert max(abs(stale[key] - before[key]) for key in stale) <= 1e-12
+
+    # the probe cap still raises before any branch is chosen
+    monkeypatch.setattr(AS, "SERVE_PROBE_MAX", 3)
+    with pytest.raises(ValueError, match="SERVE_PROBE_MAX"):
+        AS.serve_batch(probes, st, idx_v3, corpus, k=6)
+
+
+def test_probe_cells_is_row_independent_and_breaks_ties_low(spark):
+    """One cell-resolution formula for the driver prune and the in-plan
+    probe UDF: a row's cells do not depend on the batch it is resolved
+    in, exact distance ties go to the lowest cell id, and the UDF returns
+    exactly the helper's cells."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    cent = rng.normal(size=(32, 16))
+    P = rng.normal(size=(97, 16))
+    whole = S.probe_cells(P, cent, 4)
+    assert whole.shape == (97, 4)
+    for i in range(0, 97, 7):
+        assert (S.probe_cells(P[i:i + 1], cent, 4)[0] == whole[i]).all()
+    # a probe equidistant from cells 1 and 2 (and nearer than cell 0)
+    tie = S.probe_cells([[0.0, 0.0]], [[5.0, 5.0], [1.0, 0.0], [0.0, 1.0]], 1)
+    assert tie.tolist() == [[1]]
+    udf_cells = (
+        spark.createDataFrame(
+            [([float(x) for x in v],) for v in P], "v array<double>"
+        )
+        .select(S._probe_cells_udf(cent.tolist(), 4)("v").alias("c"))
+        .collect()
+    )
+    assert [list(r["c"]) for r in udf_cells] == whole.tolist()

@@ -901,3 +901,54 @@ def test_save_rejects_null_timestamps_and_keys(store, spark):
     with pytest.raises(ValueError, match="null symbol"):
         store.save_many(batch)
     assert store._snapshot() is None  # nothing landed
+
+
+def test_schema_memo_evicts_oldest_entry_at_cap(spark, tmp_path, monkeypatch):
+    """The committed-file schema memo is bounded: at the cap a new key
+    evicts exactly the OLDEST entry (not the whole memo), and the read
+    that inserted it returns the file's rows under its inferred schema."""
+    import pandas as pd
+
+    from binance_data_framework_spark import store as store_mod
+
+    root = tmp_path / "memo"
+    root.mkdir()
+    pd.DataFrame({"k": [3, 1, 2], "v": ["c", "a", "b"]}).to_parquet(
+        root / "part.parquet", index=False
+    )
+    cap = store_mod._PARQUET_SCHEMA_CACHE_MAX
+    memo = {("", f"/elsewhere/{i}.parquet"): f"schema-{i}" for i in range(cap)}
+    monkeypatch.setattr(store_mod, "_PARQUET_SCHEMA_CACHE", memo)
+    st = store_mod.SnapshotStore(spark, str(root))
+
+    rows = st._committed_parquet(["part.parquet"]).orderBy("k").collect()
+
+    assert [(r["k"], r["v"]) for r in rows] == [(1, "a"), (2, "b"), (3, "c")]
+    assert len(memo) == cap
+    assert ("", "/elsewhere/0.parquet") not in memo
+    assert all(("", f"/elsewhere/{i}.parquet") in memo for i in range(1, cap))
+    key = ("", f"{root}/part.parquet")
+    assert [f.name for f in memo[key].fields] == ["k", "v"]
+    # a memo hit reads the same rows without re-inferring
+    assert st._committed_parquet(["part.parquet"]).count() == 3
+    assert len(memo) == cap and ("", "/elsewhere/1.parquet") in memo
+
+    # concurrent misses at the cap: each evicts one entry, none raises
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    names = [f"t{i}.parquet" for i in range(24)]
+    for n in names:
+        pd.DataFrame({"k": [1], "v": [n]}).to_parquet(root / n, index=False)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            got = list(
+                ex.map(lambda n: st._committed_parquet([n]).first()["v"], names)
+            )
+    finally:
+        sys.setswitchinterval(old)
+    assert got == names
+    assert len(memo) == cap
+    assert all(("", f"{root}/{n}") in memo for n in names)
